@@ -132,14 +132,12 @@ object HybridSearch {
     // bm25TopK's eager corpus barriers — independent work, overlapped
     // (§2.6) so the fits back-fill the corpus stages' tails; the fused
     // plan (and the ranking) is unchanged
-    val denseFut = scala.concurrent.Future(
+    val (dense, lex) = Par.both(
       Pq.ivfPqTopKRerank(
         embeddings, embeddings.filter(col("vec_id") === queryVecId),
         k = perList, shortlist = shortlist, nprobe = nprobe)
-        .select(col("neighbor_id").as("id"), col("rank")))(Par.overlapEc)
-    val lex = lexShortlist(docs, queryTerms, perList)
-    val dense = scala.concurrent.Await.result(
-      denseFut, scala.concurrent.duration.Duration.Inf)
+        .select(col("neighbor_id").as("id"), col("rank")),
+      lexShortlist(docs, queryTerms, perList))
     rrfFuse(lex, dense, k, rrfK)
   }
 
@@ -168,7 +166,7 @@ object HybridSearch {
     // so they build concurrently while THIS thread materializes the truth
     // checkpoint (§2.6 overlap; the assembled plan, and the result, are
     // unchanged)
-    val tierFuts = Seq(
+    val tierFns = Seq(
       "ivfpq_rerank" -> (() => rrfFuse(lex,
         denseIds(Pq.ivfPqTopKRerank(embeddings, qVec, k = perList,
           shortlist = 100)), k)),
@@ -177,13 +175,13 @@ object HybridSearch {
           shortlist = 100, nprobe = 4)), k)),
       "lsh_multiprobe" -> (() => rrfFuse(lex,
         denseIds(SimilaritySearch.lshMultiProbeTopK(
-          embeddings, qVec, k = perList)), k))
-    ).map { case (tier, f) =>
-      tier -> scala.concurrent.Future(f())(Par.overlapEc)
-    }
-    val exactFused = rrfFuse(lex,
+          embeddings, qVec, k = perList)), k)))
+    val exactFn = () => rrfFuse(lex,
       denseIds(SimilaritySearch.bruteForceTopK(embeddings, qVec, k = perList)), k)
       .localCheckpoint() // the truth set, probed by every tier row
+    val results = Par.joinAll(tierFns.map(_._2) :+ exactFn)
+    val exactFused = results.last
+    val tiers = tierFns.map(_._1).zip(results.init)
     val truth = exactFused.select(col("id"))
     def audit(tier: String, fused: DataFrame): DataFrame =
       fused.select(col("id"))
@@ -194,13 +192,8 @@ object HybridSearch {
         .select(
           lit(tier).as("tier"), col("returned"), col("hits"),
           round(col("hits").cast("double") / lit(k.toDouble), 6).as("recall"))
-    val tiers = tierFuts.map { case (tier, fut) =>
-      tier -> scala.util.Try(scala.concurrent.Await.result(
-        fut, scala.concurrent.duration.Duration.Inf))
-    }
-    tiers.collect { case (_, scala.util.Failure(e)) => throw e }
     audit("exact_brute", exactFused)
-      .unionAll(tiers.map { case (t, f) => audit(t, f.get) }
+      .unionAll(tiers.map { case (t, f) => audit(t, f) }
         .reduce(_ unionAll _))
       .orderBy(col("tier"))
   }

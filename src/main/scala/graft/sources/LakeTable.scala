@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Cdc
+import graft.operators.{Cdc, Par}
 
 /** A COMMITTED boxed z-order layout — [[LakeSink]]'s clustered parquet
   * plus a versioned manifest, the minimal transaction log that makes
@@ -1268,24 +1268,14 @@ object LakeTable {
         return DvStats(c.version, 0, 0L)
       // the sidecar and the fresh image files are independent lands (both
       // uncommitted = invisible; the sidecar attaches to PRE-COMMIT files
-      // only, never the fresh ones) — overlapped (§2.6), both settled
-      // before the attempt proceeds or unwinds
-      val dvFut: Option[scala.concurrent.Future[(String, Long)]] =
-        if (shadowed.isEmpty) None
-        else Some(scala.concurrent.Future(landSidecar(spark, path, keys))(
-          graft.operators.Par.overlapEc))
-      val landedTry = scala.util.Try(
+      // only, never the fresh ones) — overlapped (§2.6)
+      val (dv, landed) = Par.both(
+        Option.when(shadowed.nonEmpty)(landSidecar(spark, path, keys)),
         landZOrdered(spark, path, images, cols, nFilesNew, bits))
-      val dvTry = dvFut.map(f => scala.util.Try(scala.concurrent.Await
-        .result(f, scala.concurrent.duration.Duration.Inf)))
-      val landed = landedTry.get
       val fresh = landed.map(_.path)
       val freshBoxes = landedBoxes(path, landed)
-      val (dvAttach, nKeys) = dvTry match {
-        case None => (Seq.empty[(String, String)], 0L)
-        case Some(t) =>
-          val (dvRel, n) = t.get
-          (shadowed.map(f => (f, dvRel)), n)
+      val (dvAttach, nKeys) = dv.fold((Seq.empty[(String, String)], 0L)) {
+        case (dvRel, n) => (shadowed.map(f => (f, dvRel)), n)
       }
       try {
         writeCommit(spark, path, c.version + 1,
@@ -1349,26 +1339,16 @@ object LakeTable {
       // the two lands are independent (both uncommitted = invisible, and
       // the sidecar's attachment list comes from the PRE-COMMIT manifest,
       // never from the fresh files) — overlap them (§2.6) instead of
-      // serializing sidecar-after-files; both must settle before the
-      // attempt proceeds or unwinds
-      val dvFut: Option[scala.concurrent.Future[(String, Long)]] =
-        if (shadowed.isEmpty) None
-        else Some(scala.concurrent.Future(landSidecar(spark, path, ks))(
-          graft.operators.Par.overlapEc))
-      val landedTry = scala.util.Try(
+      // serializing sidecar-after-files
+      val (dv, landed) = Par.both(
+        Option.when(shadowed.nonEmpty)(landSidecar(spark, path, ks)),
         landZOrdered(spark, path, rows, cols, nFilesNew, bits))
-      val dvTry = dvFut.map(f => scala.util.Try(scala.concurrent.Await
-        .result(f, scala.concurrent.duration.Duration.Inf)))
-      val landed = landedTry.get
       if (shadowed.isEmpty && landed.isEmpty)
         return DvStats(c.version, 0, 0L)
       val fresh = landed.map(_.path)
       val freshBoxes = landedBoxes(path, landed)
-      val (dvAttach, nKeys) = dvTry match {
-        case None => (Seq.empty[(String, String)], 0L)
-        case Some(t) =>
-          val (dvRel, n) = t.get
-          (shadowed.map(f => (f, dvRel)), n)
+      val (dvAttach, nKeys) = dv.fold((Seq.empty[(String, String)], 0L)) {
+        case (dvRel, n) => (shadowed.map(f => (f, dvRel)), n)
       }
       try {
         writeCommit(spark, path, c.version + 1,

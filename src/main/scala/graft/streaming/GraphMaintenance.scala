@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.util.sketch.BloomFilter
-import graft.operators.SimilaritySearch
+import graft.operators.{Par, SimilaritySearch}
 
 /** Continuously maintained kNN-graph artifact — the streaming arm of
   * [[SimilaritySearch.knnGraphIncrement]]: an always-on ingest stream
@@ -424,12 +424,9 @@ final class GraphMaintainer private (
     // frames) is localCheckpoint-materialized, so neither thread
     // re-derives it; applyFold's reranked graph frame itself is lazy and
     // evaluates once, on the graph-land thread alone
-    val rFut = scala.concurrent.Future(
-      landCells(fs, workDir, routingDf, RoutingArt))(GraphMaintainer.landEc)
-    val (gTok, gCells) =
-      landCells(fs, workDir, graphDf, GraphArt, preClustered = true)
-    val (rTok, rCells) = scala.concurrent.Await.result(
-      rFut, scala.concurrent.duration.Duration.Inf)
+    val ((rTok, rCells), (gTok, gCells)) = Par.both(
+      landCells(fs, workDir, routingDf, RoutingArt),
+      landCells(fs, workDir, graphDf, GraphArt, preClustered = true))
     val upserts = (gCells.map(c => (GraphArt, c) -> gTok) ++
       rCells.map(c => (RoutingArt, c) -> rTok)).toMap
     val removes = touched
@@ -593,12 +590,10 @@ final class GraphMaintainer private (
     // the quantizer land (a tiny coalesce(1) write) is independent of the
     // cell-assign materialization — overlap them (§2.6); the token is not
     // needed until the commit below
-    val qTokFut = scala.concurrent.Future(
-      landQuantizer(spark, workDir, cs))(graft.operators.Par.overlapEc)
     val bcast = spark.sparkContext.broadcast(cs)
-    val cells = SimilaritySearch.cellAssign(corpus, bcast).localCheckpoint()
-    val qTok = scala.concurrent.Await.result(
-      qTokFut, scala.concurrent.duration.Duration.Inf)
+    val (qTok, cells) = Par.both(
+      landQuantizer(spark, workDir, cs),
+      SimilaritySearch.cellAssign(corpus, bcast).localCheckpoint())
     // same one-exchange edge path + overlapped artifact writes as build
     val w = Window.partitionBy(col("cell"), col("vec_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
@@ -607,11 +602,9 @@ final class GraphMaintainer private (
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k2)
       .select(col("vec_id"), col("neighbor_id"), col("rank"), col("cos"), col("cell"))
-    val rFut = scala.concurrent.Future(
-      landCells(fs, workDir, cells, RoutingArt))(GraphMaintainer.landEc)
-    val (gTok, gCells) = landCells(fs, workDir, edges, GraphArt, preClustered = true)
-    val (rTok, rCells) = scala.concurrent.Await.result(
-      rFut, scala.concurrent.duration.Duration.Inf)
+    val ((rTok, rCells), (gTok, gCells)) = Par.both(
+      landCells(fs, workDir, cells, RoutingArt),
+      landCells(fs, workDir, edges, GraphArt, preClustered = true))
     val entries = (rCells.map(c => (RoutingArt, c) -> rTok) ++
       gCells.map(c => (GraphArt, c) -> gTok)).toMap
     assertOwner()
@@ -909,21 +902,6 @@ object GraphMaintainer {
     * (O(CheckpointEvery) commits).
     */
   private[graft] val CheckpointEvery = 10
-
-  /** Daemon pool for overlapping the two independent artifact lands of a
-    * commit (guide-§2.6 back-fill: the routing write's tasks fill the
-    * executor slots the edge pipeline's tail leaves idle). One extra
-    * thread suffices — each publish runs the graph land on the calling
-    * thread and only the routing land here, so the pool can never
-    * deadlock on itself.
-    */
-  private[streaming] lazy val landEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-land-cells")
-        t.setDaemon(true)
-        t
-      }))
 
   /** Corpus-derived coarse-quantizer sizing for an unsized [[build]] on
     * a FRESH workDir: √n clamped to [16, 131072] — mean cell size √n
@@ -1320,12 +1298,10 @@ object GraphMaintainer {
         SimilaritySearch.fetchCentroids(corpus, ids.take(derivedNCentroids(n)))
     }
     // quantizer land ∥ cell-assign materialization, as in rebuildEpoch
-    val qTokFut = scala.concurrent.Future(
-      landQuantizer(spark, workDir, cs))(graft.operators.Par.overlapEc)
     val bcast = spark.sparkContext.broadcast(cs)
-    val cells = SimilaritySearch.cellAssign(corpus, bcast).localCheckpoint()
-    val qTok = scala.concurrent.Await.result(
-      qTokFut, scala.concurrent.duration.Duration.Inf)
+    val (qTok, cells) = Par.both(
+      landQuantizer(spark, workDir, cs),
+      SimilaritySearch.cellAssign(corpus, bcast).localCheckpoint())
     // one exchange for the whole edge path: hash on cell, window keyed
     // (cell, vec_id) — row-identical to the (vec_id) window since a
     // vector routes to exactly one cell — then land WITHOUT the second
@@ -1338,11 +1314,9 @@ object GraphMaintainer {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("vec_id"), col("neighbor_id"), col("rank"), col("cos"), col("cell"))
-    val rFut = scala.concurrent.Future(
-      landCells(fs, workDir, cells, RoutingArt))(GraphMaintainer.landEc)
-    val (gTok, gCells) = landCells(fs, workDir, edges, GraphArt, preClustered = true)
-    val (rTok, rCells) = scala.concurrent.Await.result(
-      rFut, scala.concurrent.duration.Duration.Inf)
+    val ((rTok, rCells), (gTok, gCells)) = Par.both(
+      landCells(fs, workDir, cells, RoutingArt),
+      landCells(fs, workDir, edges, GraphArt, preClustered = true))
     val entries = (rCells.map(c => (RoutingArt, c) -> rTok) ++
       gCells.map(c => (GraphArt, c) -> gTok)).toMap
     val name = commitManifest(fs, workDir, epoch, entries,

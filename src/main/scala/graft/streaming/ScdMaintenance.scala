@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.operators.Cdc
+import graft.operators.{Cdc, Par}
 import graft.sources.LakeTable
 
 /** Continuously maintained SCD-TYPE-2 dimension history — the streaming
@@ -244,6 +244,16 @@ final class ScdMaintainer private (
         col("valid_from"), col("valid_to"))
     val newCur = merged.filter(col("is_current"))
       .select(col("key"), col("name"), col("val"), col("valid_from"))
+    // the current slice: rewrite its touched files (merge-on-write)
+    // while they are small; once the touched footprint outgrows the
+    // threshold, commit merge-on-read instead — O(batch) landed bytes no
+    // matter how wide the current table's files have grown
+    val touchedBytes = touchedFiles.map(f => cCur.sizes.getOrElse(f, 0L)).sum
+    val useMor = morThresholdBytes.exists(touchedBytes > _)
+    // the routing probe above already resolved the touched files at
+    // cCur — hand them down version-pinned so the commit path does not
+    // re-run the same box probe (it recomputes on any version mismatch)
+    val hint = Some((cCur.version, touchedFiles))
     // 1 ∥ 2. the closed append and the current-slice update commit to
     //    INDEPENDENT tables from the same checkpointed inputs (`merged`,
     //    `touched`), so they run as overlapping jobs (guide §2.6): the
@@ -252,28 +262,13 @@ final class ScdMaintainer private (
     //    table; the pair marker below is what publishes them together,
     //    exactly as before — a crash between the two is healed on entry
     //    regardless of which landed first.
-    //
-    // 1. closed intervals append immutably (empty appends still commit,
-    //    carrying the replay marker)
-    val closedFut = scala.concurrent.Future(LakeTable.append(
-      newClosed, closedTablePath, Seq("key", "valid_from"),
-      nFilesNew = 1, batchId = batchId, arm = "scd-closed"))(
-      graft.operators.Par.overlapEc)
-    // 2. the current slice: rewrite its touched files (merge-on-write)
-    //    while they are small; once the touched footprint outgrows the
-    //    threshold, commit merge-on-read instead — O(batch) landed bytes
-    //    no matter how wide the current table's files have grown
-    val touchedBytes = touchedFiles.map(f => cCur.sizes.getOrElse(f, 0L)).sum
-    val useMor = morThresholdBytes.exists(touchedBytes > _)
-    // the routing probe above already resolved the touched files at
-    // cCur — hand them down version-pinned so the commit path does not
-    // re-run the same box probe (it recomputes on any version mismatch)
-    val hint = Some((cCur.version, touchedFiles))
-    // the current commit runs on THIS thread while the closed append is
-    // in flight; whatever happens, the fold never unwinds before the
-    // closed append settles — an escaped in-flight commit would race the
-    // next fold's heal-on-entry rollback
-    val kvTry = scala.util.Try {
+    val (closedStats, kv0) = Par.both(
+      // 1. closed intervals append immutably (empty appends still
+      //    commit, carrying the replay marker)
+      LakeTable.append(
+        newClosed, closedTablePath, Seq("key", "valid_from"),
+        nFilesNew = 1, batchId = batchId, arm = "scd-closed"),
+      // 2. the current slice, by the arm chosen above
       if (useMor)
         LakeTable.replaceKeyedMor(
           spark, currentTablePath, touched, newCur, Seq("key"),
@@ -291,12 +286,8 @@ final class ScdMaintainer private (
             base.join(broadcast(touched), Seq("key"), "left_anti")
               .unionByName(newCur),
           appliedBatch = batchId.map(b => s"scd-current#$b"),
-          touchedHint = hint).version
-    }
-    val closedTry = scala.util.Try(scala.concurrent.Await.result(
-      closedFut, scala.concurrent.duration.Duration.Inf))
-    var kv = kvTry.get
-    val closedStats = closedTry.get
+          touchedHint = hint).version)
+    var kv = kv0
     // 3. bounded read amplification: MoR folds accumulate deletion
     //    vectors — with the fraction set, fold them back in once that
     //    share of the files is shadowed (manifest arithmetic via
@@ -381,17 +372,16 @@ final class ScdMaintainer private (
       // years-deep closed table that is touched-files-sized, so use the
       // tombstone arms' default output width rather than one file/task.
       // The two rewrites hit INDEPENDENT tables from the one checkpointed
-      // key set — overlapped like the fold's pair (§2.6); joinAll blocks
-      // until both settle, so no in-flight commit ever escapes the forget
-      val Seq(cStats, kStats) = graft.operators.Par.joinAll(Seq(
-        () => LakeTable.applyTombstones(
+      // key set — overlapped like the fold's pair (§2.6)
+      val (cStats, kStats) = Par.both(
+        LakeTable.applyTombstones(
           spark, closedTablePath, keys, Seq("key", "valid_from"),
           keyCol = "key", batchId = batchId,
           arm = "scd-forget-closed"),
-        () => LakeTable.applyTombstones(
+        LakeTable.applyTombstones(
           spark, currentTablePath, keys, Seq("key"),
           keyCol = "key", batchId = batchId,
-          arm = "scd-forget-current")))
+          arm = "scd-forget-current"))
       assertOwner()
       commitMarker(fs, workDir, v + 1,
         Marker(cStats.version, kStats.version,
@@ -505,7 +495,7 @@ object ScdMaintainer {
     val hist = Cdc.scdHistory(initialLog).localCheckpoint()
     // two independent tables derived from the one checkpointed history —
     // overlapped inits (§2.6), same back-fill win as the fold's pair
-    graft.operators.Par.joinAll(Seq(
+    Par.joinAll(Seq(
       () => LakeTable.init(
         hist.filter(!col("is_current"))
           .select(col("key"), col("name"), col("val"),

@@ -145,12 +145,6 @@ object TransitStreams {
       }
   }
 
-  /** Keyed change event with an event-time column for watermarking. */
-  case class TimedChangeEvent(
-      station_id: Int, direction: String, timestamp: Long,
-      kind: String, train_id: String, train_status: String,
-      event_time: java.sql.Timestamp)
-
   /** [[trainPositions]] with bounded state: platforms that see no traffic
     * within `horizon` of the watermark are evicted — emitted once as cleared
     * (train_id = None) and their state removed. The reference keeps every
@@ -161,15 +155,10 @@ object TransitStreams {
   def trainPositionsWithTTL(
       arrivals: Dataset[Arrival], horizon: String = "30 minutes"): Dataset[PlatformState] = {
     import arrivals.sparkSession.implicits._
-    val changes = arrivals.flatMap { a =>
-      def ev(sid: Int, dir: String, kind: String) = TimedChangeEvent(
-        sid, dir, a.timestamp, kind, a.train_id, a.train_status,
-        new java.sql.Timestamp(a.timestamp))
-      Iterator(ev(a.station_id, a.direction, "arrive")) ++
-        (for { ps <- a.prev_station_id; pd <- a.prev_direction }
-          yield ev(ps, pd, "depart")).iterator
-    }.withWatermark("event_time", horizon).as[TimedChangeEvent]
-    changes
+    arrivalChangeEvents(arrivals)
+      .withColumn("event_time", timestamp_millis(col("timestamp")))
+      .withWatermark("event_time", horizon)
+      .as[ChangeEvent]
       .groupByKey(e => (e.station_id, e.direction))
       .flatMapGroupsWithState[PlatformState, PlatformState](
         OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
@@ -182,18 +171,8 @@ object TransitStreams {
             state.remove()
             Iterator(cleared)
           } else {
-            val ordered = events.toSeq.sortBy(e =>
-              (e.timestamp, if (e.kind == "depart") 0 else 1))
             val current = state.getOption
-            val next = ordered.foldLeft(current) { (st, e) =>
-              if (st.exists(_.updated > e.timestamp)) st
-              else if (e.kind == "depart" &&
-                st.exists(s => s.updated == e.timestamp && s.train_id.isDefined)) st
-              else if (e.kind == "arrive")
-                Some(PlatformState(stationId, direction,
-                  Some(e.train_id), Some(e.train_status), e.timestamp))
-              else Some(PlatformState(stationId, direction, None, None, e.timestamp))
-            }
+            val next = applyPlatformChanges(stationId, direction, current, events)
             next.foreach { s =>
               state.update(s)
               // evict if no traffic on this platform for `horizon` past its
@@ -204,9 +183,4 @@ object TransitStreams {
           }
       }
   }
-
-  /** O4 — micro-poll loop analog: wire any of the above to a sink with a
-    * processing-time trigger (consumers/consumer.py:70-99's 1 s cadence).
-    */
-  val DefaultTriggerMs = 1000L
 }
